@@ -9,7 +9,12 @@ pipeline.
         ids compared AS STRINGS (docs_narrow casts), the same
         deterministic lexicographic tie-break the streaming curator
         uses; zero-pad numeric ids upstream if numeric-min matters)
-    exact_kept ──near──▶ near_pairs (MinHash-LSH + exact-jaccard verify)
+    exact_kept ──near──▶ near_pairs (MinHash-LSH + exact-jaccard verify;
+        finished on the driver from one Arrow fetch of executor-computed
+        bands while the input is within similarity.DRIVER_NEAR_DUP_MAX_DOCS
+        rows, DRIVER_NEAR_DUP_MAX_BYTES of text and
+        DRIVER_NEAR_DUP_MAX_PAIRS bucket pairs, else the distributed
+        bucket self-join + set joins — identical rows either way)
     near_pairs ──cluster──▶ curated (connected components over the
         near-dup graph — the SAME CC operator the KG pipeline uses for
         entity canonicalization — keep the min-doc_id representative

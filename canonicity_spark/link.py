@@ -46,6 +46,8 @@ MINHASH_K = 64
 LSH_BANDS = 32
 LSH_ROWS = 2
 _MERSENNE = (1 << 61) - 1
+_M_U64 = np.uint64(_MERSENNE)
+_M_MINUS_8_U64 = np.uint64(_MERSENNE - 8)
 _MAX_BUCKET = 1000  # LSH bucket cap: a band bucket larger than this is dropped (skew guard)
 
 #: Rolling-polynomial weights for byte-shingle hashing (FNV prime powers,
@@ -63,6 +65,23 @@ def shingles_col(c: Column, n: int = 3) -> Column:
         lambda i: c.substr(i + 1, F.lit(n)),
     )
     return F.array_distinct(F.when(F.length(c) >= n, grams).otherwise(F.array(c)))
+
+
+def _mod_mersenne(x: np.ndarray) -> np.ndarray:
+    """``x % _MERSENNE`` for int64 ``x`` (floor mod, result in [0, M)),
+    without the integer division that dominated the dense kernel.
+
+    With u the uint64 view of x: x = u - 2^64 * (u >> 63), and modulo
+    M = 2^61 - 1 we have 2^61 = 1 and 2^64 = 8, so
+    x = (u & M) + (u >> 61) + (u >> 63) * (M - 8)  (mod M).
+    That sum is below 2M, so one unsigned ``minimum(r, r - M)`` (r - M
+    wraps to a huge value when r < M) lands it in [0, M)."""
+    u = x.view(np.uint64)
+    r = u & _M_U64
+    r += u >> np.uint64(61)
+    r += (u >> np.uint64(63)) * _M_MINUS_8_U64
+    np.minimum(r, r - _M_U64, out=r)
+    return r.view(np.int64)
 
 
 def _hash_params(k: int, seed: int = 42) -> tuple[np.ndarray, np.ndarray]:
@@ -176,15 +195,14 @@ def band_hashes_of_text(
     if len(shingle_hashes) <= dense_max:
         # dense k-permutation MinHash: exact, cheap for short
         # strings (linker surfaces)
-        sig = (
-            (shingle_hashes.reshape(-1, 1) * a[None, :] + b[None, :])
-            % _MERSENNE
+        sig = _mod_mersenne(
+            shingle_hashes.reshape(-1, 1) * a[None, :] + b[None, :]
         ).min(axis=0)
     else:
         # one-permutation hashing for long documents: O(n)
         # instead of O(n*k) (Li et al., NIPS 2012), with
         # circular rotation densification for empty buckets
-        mixed = (shingle_hashes * a[0] + b[0]) % _MERSENNE
+        mixed = _mod_mersenne(shingle_hashes * a[0] + b[0])
         buckets = mixed % k
         sig = np.full(k, _MERSENNE, dtype=np.int64)
         np.minimum.at(sig, buckets, mixed)

@@ -21,9 +21,18 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from canonicity_spark import cache
 
@@ -285,21 +294,40 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def _shingle_hash_set(t: str | None) -> np.ndarray:
-    """Distinct character-5-gram set of ``t`` as sorted int64 hashes —
-    the hash image of link.shingles_col(t, 5): strings shorter than 5
+def _shingle_hash_sets(texts: list[str | None]) -> list[np.ndarray]:
+    """Distinct character-5-gram set of each text as sorted int64 hashes
+    — the hash image of link.shingles_col(t, 5): strings shorter than 5
     chars contribute themselves as a single shingle, NULL maps to the
-    one-element sentinel set (mirrors [NULL])."""
-    if t is None:
-        return _NULL_TEXT_SET
-    cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    m = _mix64(cps)
-    if len(m) < _VERIFY_SHINGLE_N:
-        h = (m * _V_WEIGHTS[: len(m)]).sum(dtype=np.uint64)
-        return np.array([h], dtype=np.uint64).view(np.int64)
-    win = np.lib.stride_tricks.sliding_window_view(m, _VERIFY_SHINGLE_N)
-    hs = (win * _V_WEIGHTS[None, :]).sum(axis=1, dtype=np.uint64)
-    return np.unique(hs).view(np.int64)
+    one-element sentinel set (mirrors [NULL]). The codepoint mix and the
+    rolling hash run once over the concatenated batch; windows that
+    straddle two texts are computed but never read."""
+    n = _VERIFY_SHINGLE_N
+    m = _mix64(
+        np.frombuffer(
+            "".join(t for t in texts if t).encode("utf-32-le"), dtype=np.uint32
+        ).astype(np.uint64)
+    )
+    n_win = len(m) - n + 1
+    h = np.zeros(max(n_win, 0), dtype=np.uint64)
+    for k in range(n if n_win > 0 else 0):
+        h += m[k : k + n_win] * _V_WEIGHTS[k]
+    out, s = [], 0
+    for t in texts:
+        ln = 0 if t is None else len(t)
+        if t is None:
+            out.append(_NULL_TEXT_SET)
+        elif ln < n:
+            hs = (m[s : s + ln] * _V_WEIGHTS[:ln]).sum(dtype=np.uint64)
+            out.append(np.array([hs], dtype=np.uint64).view(np.int64))
+        else:
+            out.append(np.unique(h[s : s + ln - n + 1]).view(np.int64))
+        s += ln
+    return out
+
+
+def _shingle_hash_set(t: str | None) -> np.ndarray:
+    """``_shingle_hash_sets`` of one text."""
+    return _shingle_hash_sets([t])[0]
 
 
 #: element-non-null list<int64> — containsNull=False matters: it keeps
@@ -327,8 +355,7 @@ def _shingle_sets_kernel(
 ) -> "Iterator[pa.RecordBatch]":
     """(doc_id, _t) -> (doc_id, _sh, _sz) — the verify-set builder."""
     for rb in batches:
-        texts = rb.column(1).to_pylist()
-        arrs = [_shingle_hash_set(t) for t in texts]
+        arrs = _shingle_hash_sets(rb.column(1).to_pylist())
         sh = _sh_list_array(arrs)
         sz = pa.array([len(a) for a in arrs], pa.int32())
         yield pa.RecordBatch.from_arrays(
@@ -337,14 +364,6 @@ def _shingle_sets_kernel(
 
 
 def _shingle_sets_schema():
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     return StructType(
         [
             StructField("doc_id", StringType()),
@@ -354,15 +373,50 @@ def _shingle_sets_schema():
     )
 
 
-def _jaccard_cols(sh_a, sh_b, sz_a, sz_b):
-    """Rounded exact jaccard from hash-set arrays + precomputed sizes.
-    intersect-only: |A∩B| = i, |A∪B| = |A|+|B|-i — same two ints the
-    round-7 union-only form divided ((|A|+|B|-|A∪B|)/|A∪B| == i/u), so
-    the double division and round are bit-identical; array_intersect
-    allocates the SMALLER array (candidates are mostly dissimilar)."""
-    inter = F.size(F.array_intersect(sh_a, sh_b))
-    union = sz_a + sz_b - inter
-    return F.round(inter / union, 6)
+def _jaccard_cols(inter, sz_a, sz_b):
+    """Rounded exact jaccard from the intersection size and both set
+    sizes: |A∪B| = |A|+|B|-i, so this is the same double division the
+    round-7 union-only form did, bit for bit. The one definition of the
+    6-digit rounding for both verify paths (the distributed one passes
+    ``size(array_intersect(sh_a, sh_b))``, the driver one the sizes it
+    intersected in numpy)."""
+    return F.round(inter / (sz_a + sz_b - inter), 6)
+
+
+def _scored_pairs(
+    with_sizes: DataFrame, inter, min_jaccard: float | None
+) -> DataFrame:
+    """(doc_a, doc_b, sz_a, sz_b, ...) -> (doc_a, doc_b, jaccard): the
+    size filter, rounded jaccard and threshold shared by both verify
+    paths. ``inter`` is the intersection-size column; the size filter
+    runs first, so the distributed path never intersects a pruned pair."""
+    if min_jaccard is not None:
+        with_sizes = with_sizes.filter(
+            F.least("sz_a", "sz_b")
+            >= F.lit(min_jaccard) * F.greatest("sz_a", "sz_b")
+        )
+    out = with_sizes.select(
+        "doc_a", "doc_b",
+        _jaccard_cols(inter, F.col("sz_a"), F.col("sz_b")).alias("jaccard"),
+    )
+    if min_jaccard is not None:
+        out = out.filter(F.col("jaccard") >= min_jaccard)
+    return out
+
+
+def _normed_docs(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, _t): string doc id and whitespace-normalized lowercase
+    text, before any repartition."""
+    normed = F.regexp_replace(F.trim(F.lower(text_col)), r"\s+", " ")
+    return docs.select(
+        F.col("doc_id").cast("string").alias("doc_id"), normed.alias("_t")
+    )
+
+
+def _doc_band_udf():
+    from canonicity_spark.link import make_minhash_band_udf
+
+    return make_minhash_band_udf(DOC_MINHASH_K, DOC_BANDS, DOC_ROWS, shingle_n=5)
 
 
 def _banded_docs(docs: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
@@ -372,21 +426,177 @@ def _banded_docs(docs: DataFrame, text_col: str) -> tuple[DataFrame, DataFrame]:
     banded: (doc_id, band_id, band_hash) — one row per LSH band.
     """
     from canonicity_spark.extract import ensure_parallelism
-    from canonicity_spark.link import make_minhash_band_udf
 
-    band_udf = make_minhash_band_udf(DOC_MINHASH_K, DOC_BANDS, DOC_ROWS, shingle_n=5)
-    normed = F.regexp_replace(F.trim(F.lower(text_col)), r"\s+", " ")
-    base = ensure_parallelism(
-        docs.select(F.col("doc_id").cast("string").alias("doc_id"), normed.alias("_t"))
-    )
+    base = ensure_parallelism(_normed_docs(docs, text_col))
     # posexplode_OUTER: prevents InferFiltersFromGenerate from pushing
     # a size/notnull filter below the repartition and re-running the
     # banding UDF twice (see link.lsh_candidates — measured 2x wall);
     # the UDF never returns null/empty arrays, so outer == inner.
-    banded = base.withColumn("_bands", band_udf(F.col("_t"))).select(
+    banded = base.withColumn("_bands", _doc_band_udf()(F.col("_t"))).select(
         "doc_id", F.posexplode_outer("_bands").alias("band_id", "band_hash")
     )
     return base, banded
+
+
+#: Bounds under which minhash_near_dup_pairs finishes on the driver:
+#: input rows (2^16 docs band to 2^20 rows, the canonicalize
+#: DRIVER_CC_MAX_EDGES envelope), UTF-8 bytes of normalized text (one
+#: Arrow fetch of text + bands, far under spark.driver.maxResultSize,
+#: and at most 8x that in driver-side shingle hashes) and candidate
+#: pairs before dedup (sum of C(c, 2) over buckets kept by the hot-bucket
+#: cap, which bounds the numpy pair arrays). Module constants, not
+#: parameters: output is identical on both paths.
+DRIVER_NEAR_DUP_MAX_DOCS = 1 << 16
+DRIVER_NEAR_DUP_MAX_BYTES = 1 << 25
+DRIVER_NEAR_DUP_MAX_PAIRS = 1 << 20
+
+
+def _bucket_row_pairs(
+    bands: np.ndarray, max_bucket: int, max_pairs: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """(n_rows, n_bands) band hashes -> row-index pairs (ra, rb), one per
+    two rows sharing a (band_id, band_hash) bucket of at most
+    ``max_bucket`` rows — the driver twin of the hot-bucket anti-join
+    plus bucket self-join (a pair sharing several buckets repeats).
+    None when there would be more than ``max_pairs`` of them."""
+    n, n_bands = bands.shape
+    orders, starts, sizes = [], [], []
+    for band in range(n_bands):
+        order = np.argsort(bands[:, band], kind="stable")
+        keys = bands[order, band]
+        start = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        size = np.diff(np.r_[start, n])
+        keep = (size >= 2) & (size <= max_bucket)
+        orders.append(order)
+        starts.append(start[keep] + band * n)
+        sizes.append(size[keep])
+    order = np.concatenate(orders)
+    start, size = np.concatenate(starts), np.concatenate(sizes)
+    if int((size * (size - 1) // 2).sum()) > max_pairs:
+        return None
+    ra, rb = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for c in np.unique(size).tolist():
+        first = start[size == c][:, None]
+        i, j = np.triu_indices(c, 1)
+        ra.append(order[(first + i).ravel()])
+        rb.append(order[(first + j).ravel()])
+    return np.concatenate(ra), np.concatenate(rb)
+
+
+def _intersection_sizes(
+    sets: list[np.ndarray], ia: np.ndarray, ib: np.ndarray
+) -> np.ndarray:
+    """|sets[ia[p]] ∩ sets[ib[p]]| per pair; sets are sorted, distinct,
+    non-empty uint64 arrays. The smaller set is binary-searched into the
+    larger one."""
+    out = np.empty(len(ia), dtype=np.int32)
+    for p, (i, j) in enumerate(zip(ia.tolist(), ib.tolist())):
+        a, b = sets[i], sets[j]
+        if len(a) > len(b):
+            a, b = b, a
+        pos = np.minimum(np.searchsorted(b, a), len(b) - 1)
+        out[p] = np.count_nonzero(b[pos] == a)
+    return out
+
+
+def _driver_near_dup_pairs(
+    docs: DataFrame,
+    text_col: str,
+    max_bucket: int,
+    min_jaccard: float | None,
+) -> DataFrame | None:
+    """minhash_near_dup_pairs finished on the driver, or None when the
+    input is over a DRIVER_NEAR_DUP_* bound.
+
+    The probe reads at most DRIVER_NEAR_DUP_MAX_DOCS + 1 normalized text
+    lengths from the input as it is (before ensure_parallelism's
+    repartition), so it costs O(bound) rows and never shuffles a large
+    corpus. Under the bounds, one Arrow fetch brings (doc_id, _t, bands)
+    with the bands computed on executors by the same UDF as the
+    distributed path; the bucket cap, pair dedup, shingle sets and
+    intersections then run in numpy, and the result goes back as a
+    LocalRelation through the same size filter, jaccard and threshold
+    expressions (``_scored_pairs``) as the distributed verify.
+
+    Semantics match the distributed path row for row: rows with a NULL
+    doc_id count toward bucket sizes but never pair; a pair is two
+    distinct ids ordered as Spark compares strings (UTF-8 bytes, which
+    Arrow's sort uses too); a doc_id held by several rows contributes
+    every (row of doc_a) x (row of doc_b) text combination, as the two
+    set joins do."""
+    from canonicity_spark.extract import ensure_parallelism
+
+    normed = _normed_docs(docs, text_col)
+    lengths = (
+        normed.select(F.octet_length("_t"))
+        .limit(DRIVER_NEAR_DUP_MAX_DOCS + 1)
+        .collect()
+    )
+    if (
+        len(lengths) > DRIVER_NEAR_DUP_MAX_DOCS
+        or sum(r[0] or 0 for r in lengths) > DRIVER_NEAR_DUP_MAX_BYTES
+    ):
+        return None
+    tbl = (
+        ensure_parallelism(normed)
+        .select("doc_id", "_t", _doc_band_udf()(F.col("_t")).alias("_bands"))
+        .toArrow()
+    )
+    ids = tbl.column("doc_id").combine_chunks().cast(pa.string())
+    bands = (
+        tbl.column("_bands").combine_chunks().flatten().to_numpy()
+        .reshape(len(ids), DOC_BANDS)
+    )
+    row_pairs = _bucket_row_pairs(bands, max_bucket, DRIVER_NEAR_DUP_MAX_PAIRS)
+    if row_pairs is None:
+        return None
+    # ids -> codes in Spark's string order (-1 for NULL), so doc_a < doc_b
+    # is code_a < code_b and a pair is one int64 key
+    uniq = pc.unique(ids.drop_null())
+    uniq = uniq.take(pc.sort_indices(uniq))
+    n_ids = max(len(uniq), 1)
+    code = pc.index_in(ids, value_set=uniq).fill_null(-1).to_numpy().astype(np.int64)
+    ca, cb = code[row_pairs[0]], code[row_pairs[1]]
+    ok = (ca >= 0) & (cb >= 0) & (ca != cb)
+    key = np.unique(np.minimum(ca, cb)[ok] * n_ids + np.maximum(ca, cb)[ok])
+    lo, hi = np.divmod(key, n_ids)
+    # fan each id pair out to every (row of lo) x (row of hi)
+    by_code = np.argsort(code, kind="stable")
+    per_code = np.bincount(code[code >= 0], minlength=n_ids)
+    first = np.cumsum(per_code) - per_code + np.count_nonzero(code < 0)
+    n_b = per_code[hi]
+    reps = per_code[lo] * n_b
+    p = np.repeat(np.arange(len(lo)), reps)
+    k = np.arange(int(reps.sum())) - np.repeat(np.cumsum(reps) - reps, reps)
+    ra = by_code[first[lo][p] + k // n_b[p]]
+    rb = by_code[first[hi][p] + k % n_b[p]]
+    # shingle sets of the rows in a pair only
+    rows = np.unique(np.r_[ra, rb])
+    texts = tbl.column("_t").take(pa.array(rows)).to_pylist()
+    sets = [x.view(np.uint64) for x in _shingle_hash_sets(texts)]
+    sz = np.fromiter((len(x) for x in sets), dtype=np.int32, count=len(sets))
+    ia, ib = np.searchsorted(rows, ra), np.searchsorted(rows, rb)
+    if min_jaccard is not None:
+        # skip intersecting pairs the size filter in _scored_pairs drops
+        # (same int-vs-double comparison)
+        fits = np.minimum(sz[ia], sz[ib]) >= min_jaccard * np.maximum(sz[ia], sz[ib])
+        p, ia, ib = p[fits], ia[fits], ib[fits]
+    scored = pa.table(
+        [
+            uniq.take(pa.array(lo[p])),
+            uniq.take(pa.array(hi[p])),
+            pa.array(sz[ia]),
+            pa.array(sz[ib]),
+            pa.array(_intersection_sizes(sets, ia, ib)),
+        ],
+        names=["doc_a", "doc_b", "sz_a", "sz_b", "_inter"],
+    )
+    schema = StructType(
+        [StructField("doc_a", StringType()), StructField("doc_b", StringType())]
+        + [StructField(c, IntegerType()) for c in ("sz_a", "sz_b", "_inter")]
+    )
+    with_sizes = docs.sparkSession.createDataFrame(scored, schema)
+    return _scored_pairs(with_sizes, F.col("_inter"), min_jaccard)
 
 
 def minhash_near_dup_pairs(
@@ -397,17 +607,32 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs over document text.
 
-    shingle → minhash → band → bucket self-join. Scale shape:
+    shingle → minhash → band → bucket cap → pairs → exact 5-gram jaccard.
+    Returns distinct (doc_a < doc_b) pairs with their jaccard; with
+    ``min_jaccard``, only pairs at or above it (see
+    ``_verify_pairs_jaccard`` for the lossless size filter).
+
+    Two-level execution, the ``canonicalize.connected_components``
+    shape. Under all three bounds — at most DRIVER_NEAR_DUP_MAX_DOCS
+    input rows and DRIVER_NEAR_DUP_MAX_BYTES of normalized text (one
+    bounded probe), then at most DRIVER_NEAR_DUP_MAX_PAIRS bucket pairs
+    before dedup (counted on the fetched bands) — everything after the
+    executor-side banding runs on the driver (``_driver_near_dup_pairs``):
+    at curation-batch scale the distributed shape is ~20 small Spark
+    jobs whose fixed latency, not data, is the cost. Above any bound,
+    the distributed path:
     - only (doc_id, band_id, band_hash) goes through the self-join
       shuffle; text is joined back just for the surviving distinct
       pairs (candidate pairs << banded rows at dedup-tuned geometry).
-    - hot buckets (boilerplate/empty docs) are excluded via a broadcast
-      anti-join on the over-cap bucket list — the quadratic-explosion
-      guard; the excluded list is logged by callers via lineage.
-    Returns distinct (doc_a < doc_b) pairs with exact 5-gram jaccard
-    (JVM-side) for thresholding.
+    - hot buckets (boilerplate/empty docs, more than ``max_bucket``
+      rows) are excluded via a broadcast anti-join on the over-cap
+      bucket list — the quadratic-explosion guard.
+    Both paths give identical rows (pinned by forcing tests).
     """
     cache.unpin_all(owner="minhash_dedup")  # release the previous invocation's pins
+    on_driver = _driver_near_dup_pairs(docs, text_col, max_bucket, min_jaccard)
+    if on_driver is not None:
+        return on_driver
     base, banded = _banded_docs(docs, text_col)
     # The banded table feeds three consumers (hot-bucket aggregate and
     # both sides of the self-join); persist it so the signature UDF runs
@@ -557,20 +782,8 @@ def _verify_pairs_jaccard(
     if n_cand <= broadcast_max_docs:
         set_a, set_b = F.broadcast(set_a), F.broadcast(set_b)
     with_sets = pairs.join(set_a, "doc_a").join(set_b, "doc_b")
-    if min_jaccard is not None:
-        with_sets = with_sets.filter(
-            F.least("sz_a", "sz_b")
-            >= F.lit(min_jaccard) * F.greatest("sz_a", "sz_b")
-        )
-    out = with_sets.select(
-        "doc_a", "doc_b",
-        _jaccard_cols(F.col("sh_a"), F.col("sh_b"), F.col("sz_a"), F.col("sz_b")).alias(
-            "jaccard"
-        ),
-    )
-    if min_jaccard is not None:
-        out = out.filter(F.col("jaccard") >= min_jaccard)
-    return out
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    return _scored_pairs(with_sets, inter, min_jaccard)
 
 
 def cosine_pairs_exact(embeddings: DataFrame, threshold: float = 0.8) -> DataFrame:

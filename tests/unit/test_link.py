@@ -205,3 +205,88 @@ def test_minhash_signature_estimates_jaccard(spark):
     sa, sb = fixtures._shingles(a), fixtures._shingles(b)
     jac = len(sa & sb) / len(sa | sb)
     assert abs(agree - jac) < 0.25  # 64 hashes -> coarse but centered estimate
+
+
+def _band_hashes_mod_reference(t, a, b, k, n_bands, n_rows, shingle_n, dense_max):
+    """band_hashes_of_text with the plain ``% _MERSENNE`` reductions the
+    folded kernel replaced — stored MinHash indexes need byte-identical
+    bands, so the kernel is pinned to this formula."""
+    import zlib
+
+    import numpy as np
+
+    if not t:
+        return [0] * n_bands
+    weights = link._SHINGLE_WEIGHTS[:shingle_n]
+    buf = np.frombuffer(t.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
+    if len(buf) < shingle_n:
+        hs = np.array([(buf * weights[: len(buf)]).sum()], dtype=np.uint64)
+    else:
+        win = np.lib.stride_tricks.sliding_window_view(buf, shingle_n)
+        hs = (win * weights[None, :]).sum(axis=1)
+    sh = np.unique(hs).astype(np.int64) & np.int64(0x7FFFFFFFFFFFFFFF)
+    m = link._MERSENNE
+    if len(sh) <= dense_max:
+        sig = ((sh.reshape(-1, 1) * a[None, :] + b[None, :]) % m).min(axis=0)
+    else:
+        mixed = (sh * a[0] + b[0]) % m
+        sig = np.full(k, m, dtype=np.int64)
+        np.minimum.at(sig, mixed % k, mixed)
+        for _ in range(2):
+            for i in range(k):
+                if sig[i] == m:
+                    sig[i] = sig[(i - 1) % k]
+    bands = sig.reshape(n_bands, n_rows)
+    return [zlib.crc32(bands[i].tobytes()) for i in range(n_bands)]
+
+
+def test_mersenne_fold_matches_floor_mod():
+    """The division-free reduction equals numpy's int64 floor mod on the
+    edge values of the wrapped product domain and on random int64."""
+    import numpy as np
+
+    m = link._MERSENNE
+    edges = np.array(
+        [0, 1, -1, m, -m, 2 * m, -2 * m, m - 1, m + 1, -m - 1, -8, -9, 7, -7,
+         np.iinfo(np.int64).min, np.iinfo(np.int64).max,
+         np.iinfo(np.int64).min + 1, np.iinfo(np.int64).max - 1],
+        dtype=np.int64,
+    )
+    rnd = np.random.RandomState(0).randint(
+        np.iinfo(np.int64).min, np.iinfo(np.int64).max, size=200_000, dtype=np.int64
+    )
+    for x in (edges, rnd, rnd.reshape(400, 500)):
+        assert np.array_equal(link._mod_mersenne(x.copy()), x % m)
+
+
+def test_band_hashes_match_mod_reference_both_geometries():
+    """Bands from the folded kernel equal the ``%`` formula at the linker
+    geometry (64 = 32x2, 3-grams) and the doc-dedup geometry (128 = 16x8,
+    5-grams), on texts below the dense cutover and above it (OPH)."""
+    import random
+
+    from canonicity_spark import similarity
+
+    rng = random.Random(3)
+    words = ["".join(rng.choice("abcdefghij klmnoé") for _ in range(rng.randint(1, 40)))
+             for _ in range(300)]
+    long_texts = [" ".join(rng.choice(words) for _ in range(400)) for _ in range(8)]
+    texts = [None, "", "a", "ab", "abc", "日本語"] + words + long_texts
+    geometries = [
+        (link.MINHASH_K, link.LSH_BANDS, link.LSH_ROWS, 3),
+        (similarity.DOC_MINHASH_K, similarity.DOC_BANDS, similarity.DOC_ROWS, 5),
+    ]
+    for k, n_bands, n_rows, shingle_n in geometries:
+        a, b = link._hash_params(k)
+        dense_max = 4 * k
+        n_oph = 0
+        for t in texts:
+            got = link.band_hashes_of_text(t, a, b, k, n_bands, n_rows, shingle_n, dense_max)
+            want = _band_hashes_mod_reference(
+                t, a, b, k, n_bands, n_rows, shingle_n, dense_max
+            )
+            assert got == want, (k, t)
+            raw = (t or "").encode("utf-8")
+            n_shingles = len({raw[i : i + shingle_n] for i in range(len(raw) - shingle_n + 1)})
+            n_oph += n_shingles > dense_max
+        assert n_oph >= 1  # the OPH branch was exercised too

@@ -72,14 +72,18 @@ def test_textops_have_no_interpreted_hof(spark):
         assert "arrayfilter" not in plan, name
 
 
-def test_udf_derived_explode_evaluates_udf_once(spark):
+def test_udf_derived_explode_evaluates_udf_once(spark, monkeypatch):
     """Generate over a pandas-UDF-derived array must not trigger
     InferFiltersFromGenerate's inferred size/notnull filter — Catalyst
     pushes it below the repartition and re-evaluates the UDF a second
     time on the raw scan (measured 2x the dedup stage wall; fixed with
     outer explodes). The regression marker is a Filter over the UDF
-    result: `size(pythonUDF...)` in the plan."""
-    from canonicity_spark import cache, link
+    result: `size(pythonUDF...)` in the plan. dd_near_dup_verified runs
+    with the driver-path doc bound at 0: its driver path returns a
+    LocalRelation plan with no explode, which would pass vacuously."""
+    from canonicity_spark import cache, link, similarity
+
+    monkeypatch.setattr(similarity, "DRIVER_NEAR_DUP_MAX_DOCS", 0)
 
     surfaces = spark.createDataFrame(
         [(f"surface {i}", 1) for i in range(20)], ["norm_surface", "freq"]
@@ -95,6 +99,8 @@ def test_udf_derived_explode_evaluates_udf_once(spark):
         plans.append(_plan(qs[name](spark, SF)))
     for plan in plans:
         assert "size(pythonUDF" not in plan, plan[:800]
+    # the near-dup plan really is the distributed banded self-join
+    assert "Generate" in plans[1] and "pythonUDF" in plans[1], plans[1][:800]
 
 
 def test_triple_resolution_broadcasts_surface_map(spark, docs, alias_dict):

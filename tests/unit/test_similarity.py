@@ -342,6 +342,11 @@ def test_shingle_hash_set_matches_string_sets():
             assert len(hsets[i] & hsets[j]) == len(ssets[i] & ssets[j]), (
                 cases[i], cases[j],
             )
+    # one batch over all texts (windows straddling two texts are never
+    # read) equals each text on its own, in either order
+    for batch in (cases, cases[::-1]):
+        for t, got in zip(batch, similarity._shingle_hash_sets(batch)):
+            assert np.array_equal(got, _shingle_hash_set(t)), repr(t)
 
 
 def test_near_dup_jaccard_matches_string_reference(spark):
@@ -395,19 +400,125 @@ def test_verify_broadcast_guard_falls_back_above_bound(spark):
     def rows_of(df):
         return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
 
-    bcast = similarity._verify_pairs_jaccard(pairs, base, owner="t_vb")
-    fallback = similarity._verify_pairs_jaccard(
-        pairs, base, owner="t_vb2", broadcast_max_docs=1
-    )
-    got_b, got_f = rows_of(bcast), rows_of(fallback)
-    cache.unpin_all(owner="t_vb")
-    cache.unpin_all(owner="t_vb2")
+    try:
+        bcast = similarity._verify_pairs_jaccard(pairs, base, owner="t_vb")
+        fallback = similarity._verify_pairs_jaccard(
+            pairs, base, owner="t_vb2", broadcast_max_docs=1
+        )
+        got_b, got_f = rows_of(bcast), rows_of(fallback)
+        plan = bcast._jdf.queryExecution().executedPlan().toString()
+    finally:
+        cache.unpin_all(owner="t_vb")
+        cache.unpin_all(owner="t_vb2")
     assert got_b == got_f and got_b  # identical pairs on both paths
     # under the bound the set table is broadcast on both join sides;
     # over it, not forced (tiny frames may still auto-broadcast, so
     # assert only the under-bound direction)
-    plan = bcast._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2
+
+
+def _near_dup_rows(df):
+    """Every output row, duplicates kept (a doc_id held by two rows
+    yields one row per text combination)."""
+    return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+
+
+def _ran_on_driver(df) -> bool:
+    """The driver path's plan is Project/Filter over a LocalRelation of
+    scored pairs; the distributed one joins (test inputs built from
+    Python lists are LogicalRDDs, not LocalRelations)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return "LocalRelation" in plan and "Join" not in plan
+
+
+def _both_paths(monkeypatch, bound, value, docs, **kw):
+    """(driver rows, distributed rows) of minhash_near_dup_pairs, the
+    distributed run forced by lowering one module-constant bound."""
+    on_driver = similarity.minhash_near_dup_pairs(docs, **kw)
+    assert _ran_on_driver(on_driver)
+    with monkeypatch.context() as m:
+        m.setattr(similarity, bound, value)
+        distributed = similarity.minhash_near_dup_pairs(docs, **kw)
+        assert not _ran_on_driver(distributed)
+        return _near_dup_rows(on_driver), _near_dup_rows(distributed)
+
+
+def _variants(base: str, n: int, prefix: str) -> list[tuple[str, str]]:
+    words = ["alpha", "beta", "gamma", "delta", "omega", "sigma"]
+    return [
+        (f"{prefix}{i:03d}", base.replace("fox", words[i % len(words)] + str(i)))
+        for i in range(n)
+    ]
+
+
+_FOX = (
+    "the quick brown fox jumps over the lazy dog and then sits down to "
+    "rest for a while before the long walk home tonight "
+)
+
+
+def test_near_dup_driver_path_matches_distributed_doc_bound(spark, monkeypatch):
+    rows = _variants(_FOX * 3, 12, "d") + [
+        (f"u{i}", f"unrelated filler number {i} " * 12) for i in range(4)
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    for kw in ({}, {"min_jaccard": 0.8}):
+        got, want = _both_paths(
+            monkeypatch, "DRIVER_NEAR_DUP_MAX_DOCS", len(rows) - 1, docs, **kw
+        )
+        assert got == want and got
+
+
+def test_near_dup_driver_path_matches_distributed_byte_bound(spark, monkeypatch):
+    """Long documents (~7 KB each, past the dense-MinHash cutover) under
+    the doc bound but over a lowered byte bound."""
+    rows = _variants(_FOX * 60, 6, "L")
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    n_bytes = sum(len(" ".join(t.split()).encode()) for _, t in rows)
+    got, want = _both_paths(
+        monkeypatch, "DRIVER_NEAR_DUP_MAX_BYTES", n_bytes - 1, docs,
+        min_jaccard=0.5,
+    )
+    assert got == want and got
+
+
+def test_near_dup_driver_path_matches_distributed_pair_bound(spark, monkeypatch):
+    """A bucket-heavy corpus — 40 variants of one text share most band
+    buckets — over a lowered candidate-pair bound."""
+    rows = _variants(_FOX * 2, 40, "b")
+    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    got, want = _both_paths(monkeypatch, "DRIVER_NEAR_DUP_MAX_PAIRS", 100, docs)
+    assert got == want and len(got) > 100
+
+
+def test_near_dup_driver_path_edge_rows(spark, monkeypatch):
+    """NULL doc_id (counts toward bucket sizes, never pairs), a doc_id on
+    two rows with different texts (every text combination is scored),
+    empty and NULL texts, and a tight hot-bucket cap."""
+    near = _variants(_FOX * 2, 4, "e")
+    rows = near + [
+        (None, near[0][1]),
+        ("e001", near[2][1] + " trailing words"),  # second row for e001
+        ("x0", ""),
+        ("x1", None),
+        ("x2", ""),
+        (None, None),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    out = {}
+    for kw in ({}, {"max_bucket": 2}, {"max_bucket": 3}, {"min_jaccard": 0.7}):
+        got, want = _both_paths(
+            monkeypatch, "DRIVER_NEAR_DUP_MAX_DOCS", 1, docs, **kw
+        )
+        assert got == want, kw
+        out[tuple(kw.items())] = got
+    plain = out[()]
+    # one row per text of e001, and the three empty/NULL texts pair up
+    assert len([r for r in plain if r[:2] == ("e000", "e001")]) == 2
+    assert ("x0", "x2", 1.0) in plain and ("x0", "x1", 0.0) in plain
+    # four rows (one with a NULL id) share the empty-text buckets: over a
+    # cap of 3, so the NULL-id row is counted
+    assert not [r for r in out[(("max_bucket", 3),)] if r[0].startswith("x")]
 
 
 def test_incremental_minhash_matches_batch(spark, tmp_path):
