@@ -207,7 +207,9 @@ def main() -> None:
             edges, driver_max_edges=0, stats=stats
         ).count()
         stats["wall_sec"] = round(time.perf_counter() - t0, 3)
-        stats["n_edges"] = int(n + n // 256)
+        # edges left after the self-loop filter: the n/256 leaf
+        # self-loops and n/65536 block self-loops drop, n - 32 at 2^21
+        stats["n_edges"] = n - n // 65536
         return stats
 
     def run_curate():

@@ -1,9 +1,13 @@
 """Persist bookkeeping (ADVICE round 1: persisted frames leaked).
 
-Operators that persist() intermediate vocabulary-sized frames
-(link.link_surfaces, similarity.minhash_near_dup_pairs,
-similarity.embedding_near_dup_pairs) register them here instead of
-calling persist() bare, tagged with an *owner* scope. Release happens
+Operators that persist() intermediate frames register them here
+instead of calling persist() bare, tagged with an *owner* scope:
+link.lsh_candidates and link.link_surfaces (``link``); every bucketed
+near-dup path and index builder in similarity (``<modality>_dedup``,
+``_incr`` and ``_index`` for minhash/simhash/emb; the jaccard verify
+pins under its caller's owner); similarity.build_ivf_index
+(``ivf_index``); streaming.process_batch (``stream_batch``). Release
+happens
 
 - at operator ENTRY: each op calls ``unpin_all(owner=<itself>)`` to
   release ITS OWN previous invocation's pins (safe because by the time

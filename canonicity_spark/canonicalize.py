@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from canonicity_spark import session
+
 ENT_PREFIX = "ent:"
 
 
@@ -188,21 +190,13 @@ def connected_components(
     # (≥ 2^20 edges), where size-first coalescing collapsed each round's
     # ~100 MB aggregate shuffle to 1-3 tasks on a 32-core host (event-
     # log measured: 8-11 s stage walls carrying 10-25 s of CPU each —
-    # the whole kernel was running nearly serial). Scoped + restored in
-    # a finally, same pattern as pipeline.run's stage_conf.
-    spark_conf = edges.sparkSession.conf
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    _pf_before = spark_conf.get(_PF, None)
-    spark_conf.set(_PF, "true")
-    try:
+    # the whole kernel was running nearly serial).
+    with session.scoped_conf(
+        edges.sparkSession, **{session.PARALLELISM_FIRST: "true"}
+    ):
         return _cc_distributed_loop(
             edges, max_iter, n_salts, use_salting, stats
         )
-    finally:
-        if _pf_before is None:
-            spark_conf.unset(_PF)
-        else:
-            spark_conf.set(_PF, _pf_before)
 
 
 def _cc_distributed_loop(

@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from canonicity_spark import cache, canonicalize, similarity, textops
+from canonicity_spark.extract import norm_col
 from canonicity_spark.io_catalog import ParquetCatalog, StageCatalog
 
 
@@ -183,7 +184,7 @@ def run(spark: SparkSession, docs: DataFrame, conf: CurationConf) -> DataFrame:
             # fingerprint groupBy with min-doc_id winner: map-side
             # combine, skew-tolerant; normalized-text md5 == the
             # textops.fingerprint definition
-            fp = F.md5(F.regexp_replace(F.trim(F.lower("text")), r"\s+", " "))
+            fp = F.md5(norm_col(F.col("text")))
             winners = (
                 kept.select("doc_id", fp.alias("_fp"))
                 .groupBy("_fp")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from canonicity_spark import skew
 from canonicity_spark.extract import norm_col
 
 # MinHash parameters: k hashes in b bands of r rows (k = b*r).
@@ -276,18 +277,12 @@ def band_join(
     tables — SURVEY §2.D marked the join "partial" in round 1).
 
     Skew guard: hot buckets are by definition FEW, so exclude them via
-    a broadcast anti-join against the over-cap bucket list on the BUILD
-    side (a window count would sort every bucket; the aggregate gets
-    map-side combine and the anti-join never shuffles the big side by
-    bucket twice). A degenerate bucket (empty strings, boilerplate)
-    would otherwise pair-explode quadratically.
+    a broadcast anti-join against the over-cap bucket list
+    (``skew.hot_keys``) on the BUILD side — the anti-join never shuffles
+    the big side by bucket twice. A degenerate bucket (empty strings,
+    boilerplate) would otherwise pair-explode quadratically.
     """
-    hot = (
-        build_bands.groupBy("band_id", "band_hash")
-        .agg(F.count("*").alias("_bsz"))
-        .filter(F.col("_bsz") > max_bucket)
-        .select("band_id", "band_hash")
-    )
+    hot = skew.hot_keys(build_bands, ["band_id", "band_hash"], max_bucket)
     guarded = build_bands.join(
         F.broadcast(hot), ["band_id", "band_hash"], "left_anti"
     )

@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from canonicity_spark import cache, canonicalize, extract, link, materialize
+from canonicity_spark import cache, canonicalize, extract, link, materialize, session
 from canonicity_spark.io_catalog import ParquetCatalog, StageCatalog
 
 
@@ -115,20 +115,10 @@ def run(
             return cat.read_stage(spark, name)
         t0 = time.perf_counter()
         pins_before = cache.mark()
-        overrides = stage_conf.get(name, {})
-        saved = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
+        with session.scoped_conf(spark, **stage_conf.get(name, {})):
             df = compute()
             conf.stages_run.append(name)
             out = cat.write_stage(df, name)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
         conf.stage_wall[name] = round(time.perf_counter() - t0, 3)
         # the stage output is checkpoint-backed now — release the pins
         # THIS stage created (link's surfaces/best etc.), and only

@@ -11,8 +11,14 @@ AQE does not.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+#: AQE coalescing mode: false (size-first) is the session default below;
+#: candidate-scale kernels scope it back to true (``scoped_conf``).
+PARALLELISM_FIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
 DEFAULT_CONF: dict[str, str] = {
     # AQE: runtime re-plan — coalesce small shuffle partitions, split
@@ -23,7 +29,7 @@ DEFAULT_CONF: dict[str, str] = {
     # parallelism", defeating coalescing; the pipeline has many
     # vocabulary-scale shuffles where 64 near-empty tasks cost more than
     # the work — let AQE actually coalesce to the advisory size.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    PARALLELISM_FIRST: "false",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # NOTE on spark.sql.optimizer.canChangeCachedPlanOutputPartitioning:
     # tried globally (it lets AQE coalesce inside cached subtrees, and
@@ -103,6 +109,25 @@ DEFAULT_CONF: dict[str, str] = {
     # list is micro-batch-sized by construction (MAX_PROBE_VALUES cap).
     "spark.sql.parquet.pushdown.inFilterThreshold": str(70000),
 }
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **kv: str) -> Iterator[None]:
+    """Set session conf keys for the duration of a ``with`` block and
+    restore them after it, also when it raises: a key that was unset is
+    unset again, a key that was set gets its old value back. Keys are
+    dotted, so callers pass ``**{key: value}``."""
+    saved = {k: spark.conf.get(k, None) for k in kv}
+    for k, v in kv.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _cap_local_threads(master: str | None) -> str | None:

@@ -22,13 +22,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Keys whose row count exceeds threshold — by definition few."""
+def hot_keys(df: DataFrame, key_cols: list[str], threshold: int) -> DataFrame:
+    """Key tuples with more than ``threshold`` rows — by definition few.
+    The one hot-bucket aggregate: ``hot_key_join``'s hot slice and the
+    LSH bucket caps (link.band_join, similarity.bucket_pairs). An
+    aggregate, not a window count, so it gets map-side combine and never
+    sorts every bucket."""
     return (
-        df.groupBy(key)
+        df.groupBy(*key_cols)
         .agg(F.count("*").alias("_cnt"))
         .filter(F.col("_cnt") > threshold)
-        .select(key)
+        .select(*key_cols)
     )
 
 
@@ -50,7 +54,7 @@ def hot_key_join(
     """
     if how not in ("inner", "left"):
         raise ValueError("hot_key_join supports inner/left joins")
-    hk = hot_keys(big, key, threshold)
+    hk = hot_keys(big, [key], threshold)
     big_hot = big.join(F.broadcast(hk), key, "left_semi")
     big_cold = big.join(F.broadcast(hk), key, "left_anti")
     small_hot = small.join(F.broadcast(hk), key, "left_semi")

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from canonicity_spark.extract import norm_col
+
 # Tiny embedded stopword lists for the language-ID heuristic.
 STOPWORDS = {
     "en": ["the", "of", "and", "to", "in", "a", "is", "that", "for", "it"],
@@ -106,7 +108,7 @@ def fingerprint(docs: DataFrame) -> DataFrame:
     """Deterministic document fingerprints: md5 of the normalized text
     (portable — DuckDB computes the identical value) plus a Spark-native
     xxhash64 for cheap 64-bit joins at scale."""
-    normed = F.regexp_replace(F.trim(F.lower("text")), r"\s+", " ")
+    normed = norm_col(F.col("text"))
     return docs.select(
         "doc_id",
         F.md5(normed).alias("fp_md5"),

@@ -33,3 +33,22 @@ def test_shuffle_partitions_track_capped_cores(monkeypatch):
     master = session._cap_local_threads("local[32]")
     n = session._local_core_count(master)
     assert max(8, 2 * n) == 56
+
+
+def test_scoped_conf_restores_on_error(spark):
+    """An exception inside the scope restores every key: one that was
+    unset ends up unset, one that was set gets its old value back."""
+    import pytest
+
+    unset_key = "spark.canonicity.test.scopedUnset"
+    set_key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(set_key)
+    inside = str(int(before) + 1)
+    assert spark.conf.get(unset_key, None) is None
+    with pytest.raises(RuntimeError, match="inside"):
+        with session.scoped_conf(spark, **{unset_key: "x", set_key: inside}):
+            assert spark.conf.get(unset_key) == "x"
+            assert spark.conf.get(set_key) == inside
+            raise RuntimeError("inside the scope")
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(set_key) == before

@@ -521,6 +521,78 @@ def test_near_dup_driver_path_edge_rows(spark, monkeypatch):
     assert not [r for r in out[(("max_bucket", 3),)] if r[0].startswith("x")]
 
 
+def test_bucket_pairs_kernel_parity(spark):
+    """The bucket guard and pair kernel agree across their three forms on
+    small random band tables: ``_bucket_row_pairs`` (the numpy twin on
+    the near-dup driver path) == ``bucket_pairs`` self mode, and
+    incremental mode (with and without the ``_kp`` pruning) == self mode
+    over the union restricted to pairs with a new side. Edge rows: a
+    bucket of exactly ``max_bucket`` rows (kept), one of
+    ``max_bucket + 1`` (dropped), NULL ids (counted toward bucket size,
+    never paired) and a pair sharing several buckets."""
+    mb, n_bands = 4, 3
+    rng = np.random.RandomState(11)
+    n_rand = 40
+    ids = [None if i % 7 == 3 else f"r{i:02d}" for i in range(n_rand)]
+    bands = [list(rng.randint(0, 12, size=n_bands)) for _ in range(n_rand)]
+
+    def edge(doc_id, *shared):
+        # the listed leading bands take the shared hashes; the rest get a
+        # value no other row has
+        ids.append(doc_id)
+        row = len(bands)
+        bands.append(list(shared) + [1000 + row] * (n_bands - len(shared)))
+
+    for i in range(mb):
+        edge(f"k{i}", 100)  # exactly max_bucket rows: kept
+    for i in range(mb + 1):
+        edge(f"h{i}", 101)  # max_bucket + 1 rows: dropped
+    for doc_id in ["n0", "n1", "n2", None, None]:
+        edge(doc_id, 102)  # 3 ids + 2 NULL rows: over the cap
+    for doc_id in ["m0", "m1", None]:
+        edge(doc_id, 103)  # under the cap: the ids pair, NULL does not
+    edge("s0", 104, 104, 104)  # s0/s1 share all three buckets
+    edge("s1", 104, 104, 104)
+    mat = np.array(bands, dtype=np.int64)
+
+    ra, rb = similarity._bucket_row_pairs(mat, mb, 1 << 20)
+    twin = {
+        (min(ids[a], ids[b]), max(ids[a], ids[b]))
+        for a, b in zip(ra.tolist(), rb.tolist())
+        if ids[a] is not None and ids[b] is not None and ids[a] != ids[b]
+    }
+    keys = ["band_id", "band_hash"]
+    rows = [
+        (ids[r], b, int(mat[r, b])) for r in range(len(ids)) for b in range(n_bands)
+    ]
+    schema = "doc_id string, band_id int, band_hash long"
+    union = spark.createDataFrame(rows, schema)
+
+    def pairs_of(df):
+        got = [(r.id_a, r.id_b) for r in df.collect()]
+        assert len(got) == len(set(got))  # distinct pairs
+        return set(got)
+
+    self_pairs = pairs_of(similarity.bucket_pairs(union, keys, "doc_id", mb))
+    assert self_pairs == twin
+    assert all(a < b for a, b in self_pairs)
+    assert ("k0", "k3") in self_pairs and ("m0", "m1") in self_pairs
+    assert ("s0", "s1") in self_pairs
+    assert not [p for p in self_pairs if p[0][0] in "hn" and p[1][0] in "hn"]
+
+    new_ids = {d for i, d in enumerate(ids) if d is not None and i % 3 == 0}
+    new_rows = [r for i, r in enumerate(rows) if (i // n_bands) % 3 == 0]
+    new = spark.createDataFrame(new_rows, schema)
+    want = {p for p in self_pairs if p[0] in new_ids or p[1] in new_ids}
+    assert want and want != self_pairs
+    kp = similarity.KEY_PREFIX_COL
+    for all_rows in (union, union.withColumn(kp, similarity.key_prefix_col(keys))):
+        got = pairs_of(
+            similarity.bucket_pairs(new, keys, "doc_id", mb, all_rows=all_rows)
+        )
+        assert got == want
+
+
 def test_incremental_minhash_matches_batch(spark, tmp_path):
     """Incremental dedup against a stage-written index must equal the
     batch run over (indexed + new) restricted to pairs touching a new
